@@ -898,7 +898,9 @@ class ClassBalancedSampling(SamplingStrategy):
     join back on the label (G1 + J1).  ``smoothing`` adds the reference
     training-utils variant ``w = n/(k*(count+base))``
     (``training_experiments/utils/weights.py:13-110``) up to the integer
-    scale factor.
+    scale factor.  A class whose ``count + smoothing`` exceeds
+    ``weight_scale`` would get weight 0; the plan raises instead when it
+    runs.
     """
 
     label_col: str = "label"
@@ -914,9 +916,25 @@ class ClassBalancedSampling(SamplingStrategy):
         counts = base.groupBy(self.label_col).agg(F.count(F.lit(1)).alias("_cnt"))
         # floor(), not cast: Spark's double->bigint cast truncates while
         # DuckDB's rounds — floor() is identical in both engines.
+        w_cls = F.floor(F.lit(self.weight_scale) / (F.col("_cnt") + F.lit(self.smoothing))).cast("bigint")
+        # a class whose weight floors to 0 would never be drawn: surfaced
+        # in-plan via raise_error (the MixtureSampler guard), not as a
+        # silently missing class
         weights = counts.withColumn(
             "_w_cls",
-            F.floor(F.lit(self.weight_scale) / (F.col("_cnt") + F.lit(self.smoothing))).cast("bigint"),
+            F.when(
+                w_cls <= 0,
+                F.raise_error(
+                    F.concat(
+                        F.lit("class weight floors to 0 for label "),
+                        F.col(self.label_col).cast("string"),
+                        F.lit(
+                            f" (count too large for weight_scale={self.weight_scale};"
+                            " increase weight_scale)"
+                        ),
+                    )
+                ).cast("bigint"),
+            ).otherwise(w_cls),
         )
         weighted = base.join(F.broadcast(weights), self.label_col).withColumn(
             "w", F.col("_w_cls")

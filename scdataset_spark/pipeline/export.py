@@ -3,10 +3,12 @@
 Two export paths:
 
 - ``iterate_batches``: driver-side iterator yielding exact
-  ``batch_size`` dicts of numpy arrays in plan order via
-  ``toLocalIterator`` (partitions stream one at a time — nothing is
-  collected whole).  The reference's DataLoader-yield analogue; fine
-  for single-consumer training loops.
+  ``batch_size`` dicts of numpy arrays in plan order.  The sorted plan
+  reaches the driver as Arrow record batches, one partition at a time
+  (nothing is collected whole, no per-row Python objects), and the
+  upstream — hook stage included — is evaluated once per call.  The
+  reference's DataLoader-yield analogue; fine for single-consumer
+  training loops.
 
 - ``write_epoch_plan``: the scale path.  Materializes one epoch as
   parquet partitioned by ``fetch_id`` with rows sorted by ``pos``
@@ -28,6 +30,55 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 
+def _ipc_blobs():
+    # built by a factory so it is pickled by value to the Python workers
+    def to_ipc(batches):
+        import pyarrow as pa
+
+        for rb in batches:
+            sink = pa.BufferOutputStream()
+            with pa.ipc.new_stream(sink, rb.schema) as w:
+                w.write_batch(rb)
+            yield pa.record_batch([pa.array([sink.getvalue().to_pybytes()], pa.binary())], ["ipc"])
+
+    return to_ipc
+
+
+def _to_numpy(col) -> np.ndarray:
+    """One Arrow column as the array ``np.array`` builds from the same
+    values as Spark rows: integers as int64, floats as float64, booleans
+    as bool, strings as ``<U{longest}``; a column with nulls, or of another type, goes
+    through its Python values (``object`` dtype where ``np.array``
+    would give it).  Top-level struct and map values become ``Row`` and
+    ``dict`` as in rows; values nested inside an array or struct keep
+    pyarrow's Python form."""
+    import pyarrow as pa
+
+    t = col.type
+    if col.null_count == 0:
+        if pa.types.is_integer(t):
+            return col.to_numpy().astype(np.int64, copy=False)
+        if pa.types.is_floating(t):
+            return col.to_numpy().astype(np.float64, copy=False)
+        if pa.types.is_boolean(t):
+            return col.to_numpy()
+        if pa.types.is_string(t) or pa.types.is_large_string(t):
+            return col.to_numpy(zero_copy_only=False).astype(str)
+    if pa.types.is_timestamp(t) and t.tz is not None:
+        # rows carry session-zone timestamps as naive local datetimes
+        from pyspark.sql.types import TimestampType
+
+        ts = TimestampType()
+        return np.array([None if v is None else ts.fromInternal(v) for v in col.cast(pa.int64()).to_pylist()])
+    if pa.types.is_struct(t):
+        from pyspark.sql import Row
+
+        return np.array([None if v is None else Row(**v) for v in col.to_pylist()])
+    if pa.types.is_map(t):
+        return np.array([None if v is None else dict(v) for v in col.to_pylist()])
+    return np.array(col.to_pylist())
+
+
 def iterate_batches(
     planned: DataFrame,
     batch_size: int,
@@ -36,16 +87,56 @@ def iterate_batches(
     drop_last: bool = False,
 ) -> Iterator[dict[str, np.ndarray]]:
     """Yield dicts of numpy arrays in plan order, exactly ``batch_size``
-    rows per batch (trailing partial kept unless ``drop_last``)."""
-    df = planned.select(order_col, *columns).orderBy(order_col)
-    buf: list[tuple] = []
-    for row in df.toLocalIterator(prefetchPartitions=True):
-        buf.append(tuple(row[c] for c in columns))
-        if len(buf) == batch_size:
-            yield {c: np.array([r[i] for r in buf]) for i, c in enumerate(columns)}
-            buf = []
-    if buf and not drop_last:
-        yield {c: np.array([r[i] for r in buf]) for i, c in enumerate(columns)}
+    rows per batch (trailing partial kept unless ``drop_last``).
+
+    The frame sorted by ``order_col`` streams to the driver as Arrow
+    record batches: executors serialize each one as an Arrow IPC blob
+    (``mapInArrow``) and ``toLocalIterator`` pulls them a partition at a
+    time, prefetching the next.  Rows left over at a record-batch or
+    partition boundary carry over as Arrow slices, and each delivered
+    batch is converted to numpy once.
+
+    The upstream is evaluated once: a range sort samples its input
+    before sorting it, and without the hash exchange in front that
+    sampling job would re-run the whole upstream — a hook stage's
+    ``fetch_transform`` would see every row twice.  The exchange lands
+    the upstream in shuffle files, which both the sampler and the sort
+    read; its explicit partition count keeps AQE from coalescing the
+    Python stage in front of it onto a few cores."""
+    import pyarrow as pa
+
+    from scdataset_spark.session import python_stage_partitions
+
+    out_cols = list(dict.fromkeys(columns))  # callers may list order_col
+    blobs = (
+        planned.select(*dict.fromkeys([order_col, *out_cols]))
+        .repartition(python_stage_partitions(planned), order_col)
+        .orderBy(order_col)
+        .select(*out_cols)
+        .mapInArrow(_ipc_blobs(), "ipc binary")
+        .toLocalIterator(prefetchPartitions=True)
+    )
+    try:
+        pending: list = []  # Arrow tables not yet delivered, in order
+        have = 0
+        for row in blobs:
+            pending.append(pa.ipc.open_stream(pa.py_buffer(row[0])).read_all())
+            have += pending[-1].num_rows
+            if have < batch_size:
+                continue
+            buf = pa.concat_tables(pending)
+            off = 0
+            while have - off >= batch_size:
+                part = buf.slice(off, batch_size)
+                yield {c: _to_numpy(part.column(c)) for c in columns}
+                off += batch_size
+            pending, have = [buf.slice(off)], have - off
+        if have and not drop_last:
+            part = pa.concat_tables(pending)
+            yield {c: _to_numpy(part.column(c)) for c in columns}
+    finally:
+        # a consumer that stops early closes the socket stream here
+        blobs.close()
 
 
 def write_epoch_plan(

@@ -77,6 +77,124 @@ class TestExport:
         batches = list(iterate_batches(planned, 256, ["row_id"], drop_last=True))
         assert all(len(b["row_id"]) == 256 for b in batches)
 
+    # -- parity with the per-row implementation the Arrow hand-off
+    # replaced: same values, same dtypes, batch by batch
+
+    @staticmethod
+    def _row_oracle(planned, batch_size, columns, order_col="pos", drop_last=False):
+        df = planned.select(order_col, *columns).orderBy(order_col)
+        buf = []
+        for row in df.toLocalIterator():
+            buf.append(tuple(row[c] for c in columns))
+            if len(buf) == batch_size:
+                yield {c: np.array([r[i] for r in buf]) for i, c in enumerate(columns)}
+                buf = []
+        if buf and not drop_last:
+            yield {c: np.array([r[i] for r in buf]) for i, c in enumerate(columns)}
+
+    def _assert_parity(self, planned, batch_size, columns, **kw):
+        got = list(iterate_batches(planned, batch_size, columns, **kw))
+        want = list(self._row_oracle(planned, batch_size, columns, **kw))
+        assert len(got) == len(want)
+        for g, w in zip(got, want):
+            assert list(g) == list(w)
+            for c in w:
+                assert g[c].dtype == w[c].dtype, c
+                assert g[c].tolist() == w[c].tolist(), c
+        return got
+
+    def test_parity_string_int_double(self, spark):
+        li = load_table(spark, "lineitem", SF_DIR_SMALL)
+        planned = with_batches(BlockShuffling(block_size=16).plan(li, seed=3), batch_size=100, fetch_factor=4)
+        got = self._assert_parity(planned, 100, ["row_id", "l_linenumber", "l_quantity", "l_returnflag", "l_shipdate"])
+        assert got[0]["l_returnflag"].dtype.kind == "U"
+
+    def test_parity_columns_include_order_col(self, spark):
+        li = load_table(spark, "lineitem", SF_DIR_SMALL)
+        planned = with_batches(Streaming().plan(li, seed=1), batch_size=64, fetch_factor=2)
+        self._assert_parity(planned, 64, ["pos", "row_id", "pos"])
+
+    def test_parity_nullable_and_other_types(self, spark):
+        df = spark.range(300).select(
+            F.col("id").alias("pos"),
+            F.when(F.col("id") % 7 == 0, None).otherwise(F.col("id")).alias("maybe_int"),
+            F.when(F.col("id") % 5 == 0, None).otherwise(F.concat(F.lit("s"), F.col("id").cast("string"))).alias("maybe_str"),
+            F.col("id").cast("int").alias("i32"),
+            F.col("id").cast("float").alias("f32"),
+            (F.col("id") % 2 == 0).alias("flag"),
+            F.date_add(F.lit("2020-01-01").cast("date"), F.col("id").cast("int")).alias("day"),
+            F.timestamp_seconds(F.col("id") * 3600).alias("ts"),
+            F.col("id").cast("decimal(12,2)").alias("dec"),
+            F.array(F.col("id").cast("double"), F.lit(0.5)).alias("vec"),
+            F.struct(F.col("id").alias("a"), F.lit("x").alias("b")).alias("st"),
+            F.create_map(F.lit("k"), F.col("id")).alias("mp"),
+        )
+        cols = ["maybe_int", "maybe_str", "i32", "f32", "flag", "day", "ts", "dec", "vec", "st", "mp"]
+        got = self._assert_parity(df.repartition(3), 64, cols)
+        assert got[0]["maybe_int"].dtype == object
+
+    def test_parity_empty_input_yields_nothing(self, spark):
+        df = spark.range(0).select(F.col("id").alias("pos"), F.col("id").alias("row_id"))
+        assert self._assert_parity(df, 8, ["row_id"]) == []
+
+    def test_parity_across_partition_and_record_batch_boundaries(self, spark):
+        # 37 partitions of ~81 rows and 50-row Arrow record batches: most
+        # 64-row batches take rows from two record batches or partitions
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        before = spark.conf.get(key)
+        spark.conf.set(key, "50")
+        try:
+            df = spark.range(0, 3000, 1, 37).select(
+                ((F.col("id") * 7919) % 3001).alias("pos"), (F.col("id") * 0.5).alias("x")
+            )
+            got = self._assert_parity(df, 64, ["pos", "x"])
+        finally:
+            spark.conf.set(key, before)
+        assert sum(len(b["pos"]) for b in got) == 3000
+
+    def test_parity_drop_last(self, spark):
+        li = load_table(spark, "lineitem", SF_DIR_SMALL)
+        planned = with_batches(BlockShuffling(block_size=8).plan(li, seed=9), batch_size=100, fetch_factor=3)
+        got = self._assert_parity(planned, 100, ["row_id", "l_discount"], drop_last=True)
+        assert li.count() // 100 == len(got)
+
+
+class TestExportHandOff:
+    def _hooked(self, spark, acc):
+        li = load_table(spark, "lineitem", SF_DIR_SMALL)
+        planned = with_batches(BlockShuffling(block_size=16).plan(li, seed=2), batch_size=32, fetch_factor=4)
+
+        def fetch_transform(pdf):
+            acc.add(len(pdf))
+            return pdf
+
+        return run_hook_pipeline(
+            planned.select("row_id", "pos", "fetch_id"),
+            "row_id bigint, pos bigint, fetch_id bigint",
+            batch_size=32,
+            fetch_transform=fetch_transform,
+        )
+
+    def test_hook_stage_runs_once_per_epoch(self, spark):
+        acc = spark.sparkContext.accumulator(0)
+        delivered = sum(len(b["row_id"]) for b in iterate_batches(self._hooked(spark, acc), 32, ["row_id"]))
+        assert delivered == load_table(spark, "lineitem", SF_DIR_SMALL).count()
+        assert acc.value == delivered
+
+    def test_early_close_leaks_no_job(self, spark):
+        import time
+
+        sc = spark.sparkContext
+        gen = iterate_batches(self._hooked(spark, sc.accumulator(0)), 32, ["row_id"])
+        for batch in gen:
+            assert len(batch["row_id"]) == 32
+            break
+        gen.close()
+        deadline = time.monotonic() + 60
+        while list(sc.statusTracker().getActiveJobsIds()) and time.monotonic() < deadline:
+            time.sleep(0.2)
+        assert list(sc.statusTracker().getActiveJobsIds()) == []
+
 
 class TestHookOrder:
     """T1-T4 execution order per reference docs/source/transforms.rst:39-63:

@@ -120,6 +120,20 @@ class TestClassBalanced:
         for c in counts:
             assert 0.8 * ideal <= c <= 1.2 * ideal
 
+    def test_weight_flooring_to_zero_raises(self, spark):
+        """A class larger than ``weight_scale`` would get weight 0 and
+        never be drawn while the others are; the plan raises when it
+        runs instead."""
+        cust = load_table(spark, "customer", SF_DIR_SMALL)
+        smallest, largest = cust.groupBy("c_mktsegment").count().agg(F.min("count"), F.max("count")).first()
+        assert smallest < largest
+        strat = ClassBalancedSampling(
+            label_col="c_mktsegment", block_size=8, total_size=100, weight_scale=largest - 1
+        )
+        drawn = strat.plan(cust, seed=5)  # lazy: no job yet
+        with pytest.raises(Exception, match="class weight floors to 0"):
+            drawn.count()
+
 
 class TestExactLen:
     @pytest.mark.parametrize(
